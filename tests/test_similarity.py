@@ -860,6 +860,72 @@ def test_two_level_assignment_tracks_flat():
     assert overlap >= 0.5, overlap
 
 
+def test_top_cells_tie_rule_and_colocation(spark):
+    # The IVF quantizer's one tie rule: equal cell scores rank by
+    # ascending cell id among the cells the routing scores, flat or
+    # two-level, and a tied row's corpus cell is among its probed cells.
+    import numpy as np
+
+    cents = np.eye(16)
+    row = np.zeros(16)
+    row[[3, 9]] = 1.0 / np.sqrt(2.0)
+    assert similarity._top_cells(row[None, :], cents, 3, None).tolist() == [
+        [3, 9, 0]
+    ]
+    # L1 groups listed high cells first: the tie still ranks 3 before 9
+    tl_index = (cents[:2], [np.arange(8, 16), np.arange(8)])
+    assert similarity._top_cells(
+        row[None, :], cents, 3, tl_index
+    ).tolist() == [[3, 9, 0]]
+
+    # co-location over real pairs: the cell a corpus side assigns the
+    # tied row (IVFPQ encode, knn_cosine_ivf's one-cell table) is the
+    # probe's first cell and lies in every wider probe set
+    df = spark.createDataFrame(
+        [(7, row.tolist())], "vec_id long, embedding array<double>"
+    )
+    encoded = similarity.ivfpq_encode(
+        df, cents, cents, np.zeros((2, 2, 8)), "vec_id", "embedding"
+    ).collect()
+    corpus_cells = similarity._cells_table(
+        df, cents, 1, None, "vec_id", "embedding"
+    ).collect()
+    assert [r["cell"] for r in encoded] == [r["cell"] for r in corpus_cells] == [3]
+
+    def probe(n_probe):
+        return sorted(
+            r["cell"]
+            for r in similarity._ivfpq_probe_table(
+                df, cents, "vec_id", "embedding", n_probe
+            ).collect()
+        )
+
+    assert probe(1) == [3]
+    assert probe(3) == [0, 3, 9]
+
+
+def test_cells_table_spreads_corpus_not_bounded_probe(emb):
+    # A query batch is probed where it lies (spreading the registered
+    # IVFPQ probe batch costs a shuffle and buys nothing); a
+    # one-split corpus scan is spread so the assignment matmul is not
+    # confined to one Python worker.
+    import numpy as np
+
+    def plan(df):
+        jvm = df.sparkSession._jvm
+        return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    cents = np.eye(64)[:16]
+    probe = similarity._ivfpq_probe_table(
+        emb.where("vec_id < 50"), cents, "vec_id", "embedding", 8
+    )
+    assert "RoundRobinPartitioning" not in plan(probe), plan(probe)
+    corpus = similarity._cells_table(emb, cents, 1, None, "vec_id", "embedding")
+    assert "RoundRobinPartitioning" in plan(corpus), plan(corpus)
+
+
 def test_cosine_pairs_ivf_two_level_recall(spark):
     # End-to-end: with many cells and two-level routing ON, the IVF pair
     # tier still recovers the bulk of the exact near-dup pairs.

@@ -1,10 +1,11 @@
-"""Capture .explain('formatted') for queries into plans/r12/.
+"""Capture .explain('formatted') for queries into an output directory.
 
-Optimization-round evidence (OPTIMIZATION_r12.md): <query>_before.txt at the
-pre-optimization HEAD, <query>_after.txt regenerated after each change.
+Optimization evidence (OPTIMIZATION_r*.md): <query>_before.txt at the
+pre-change commit, <query>_after.txt regenerated after the change.
 
-Usage: PYTHONPATH=. python tools/r12_dump_plans.py [suffix] [query ...]
-  suffix defaults to "before"; with no query list, dumps the full bench set.
+Usage: PYTHONPATH=. python tools/plan_snapshot.py <out_dir> [suffix] [query ...]
+  e.g. plans/r12 after semantic_dedup_ivf; suffix defaults to "before";
+  with no query list, dumps the full bench set.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = REPO / "plans" / "r12"
 
 
 def main() -> None:
@@ -25,8 +25,11 @@ def main() -> None:
     from node_mongo2influx_spark.engine import Engine
     from node_mongo2influx_spark.plans import load_registry
 
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out = Path(sys.argv[1])
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:]
     if not names:
         names = [
             n
@@ -43,18 +46,18 @@ def main() -> None:
             for n in sec
         ]
 
-    eng = Engine.builder(app_name="r12-plan-dump", master="local[4]")
+    eng = Engine.builder(app_name="plan-snapshot", master="local[4]")
     spark = eng.spark
     spark.sparkContext.setLogLevel("ERROR")
     reg = load_registry()
-    OUT.mkdir(parents=True, exist_ok=True)
+    out.mkdir(parents=True, exist_ok=True)
 
     for name in names:
         df = reg[name].fn(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), "formatted"
         )
-        (OUT / f"{name}_{suffix}.txt").write_text(plan)
+        (out / f"{name}_{suffix}.txt").write_text(plan)
         print(f"wrote {name}_{suffix}.txt ({len(plan)} chars)")
 
 
